@@ -42,11 +42,26 @@ object HudiFixtureBuilder {
     // first dir's data while its oracle reads the second's
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(abs.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"/root/repo/target/hudi-fixtures/$sf-$h"
+    s"$targetDir/hudi-fixtures/$sf-$h"
   }
+
+  /** The build output directory of the checkout these classes were
+    * compiled in: the nearest `target` ancestor of the class files (sbt
+    * compiles into `target/scala-2.13/classes`), else the class root's
+    * parent (a build that keeps its own output tree). Fixture tables and test scratch tables
+    * live under it, so a second checkout never writes into another's tree.
+    */
+  lazy val targetDir: String =
+    Option(getClass.getProtectionDomain.getCodeSource).map { cs =>
+      val classes = new java.io.File(cs.getLocation.toURI).getAbsoluteFile
+      Iterator.iterate(classes)(_.getParentFile).takeWhile(_ != null)
+        .find(_.getName == "target").getOrElse(classes.getParentFile).getPath
+    }.getOrElse(sys.props("java.io.tmpdir"))
+
 
   def cowPath(sfDir: String): String = s"${root(sfDir)}/cow_orders"
   def morPath(sfDir: String): String = s"${root(sfDir)}/mor_orders"
+  def morParquetPath(sfDir: String): String = s"${root(sfDir)}/mor_parquet_orders"
   def morLogOnlyPath(sfDir: String): String = s"${root(sfDir)}/mor_log_only"
   def partPath(sfDir: String): String = s"${root(sfDir)}/cow_part_nation"
   def nullpartPath(sfDir: String): String = s"${root(sfDir)}/cow_nullpart_nation"
@@ -105,7 +120,7 @@ object HudiFixtureBuilder {
 
   private def ensureLocked(spark: SparkSession, sfDir: String): Unit = synchronized {
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val marker = new Path(root(sfDir), "_GRAFT_FIXTURES_READY_v43")
+    val marker = new Path(root(sfDir), "_GRAFT_FIXTURES_READY_v44")
     if (fs.exists(marker)) { readySeen.add(root(sfDir)); return }
     // cross-PROCESS exclusion (synchronized only guards this JVM):
     // create-exclusive a lock file holding a unique token. Losers poll
@@ -113,7 +128,7 @@ object HudiFixtureBuilder {
     // lock-free); a holder only ever deletes the lock it created (token
     // compare), so a crashed build can't cascade into a waiter deleting
     // a lock a third process just acquired.
-    val lock = new Path("/root/repo/target/hudi-fixtures", s"${new Path(root(sfDir)).getName}.lock")
+    val lock = new Path(s"$targetDir/hudi-fixtures", s"${new Path(root(sfDir)).getName}.lock")
     fs.mkdirs(lock.getParent)
     val token = java.util.UUID.randomUUID().toString
     def lockContent(): Option[String] =
@@ -171,6 +186,7 @@ object HudiFixtureBuilder {
           fs.delete(new Path(root(sfDir)), true)
           buildCowOrders(spark, sfDir); own()
           buildMorOrders(spark, sfDir); own()
+          buildMorOrders(spark, sfDir, parquetLogs = true); own()
           buildMorLogOnly(spark, sfDir); own()
           buildCowClustered(spark, sfDir); own()
           buildCowOverwrite(spark, sfDir); own()
@@ -392,16 +408,21 @@ object HudiFixtureBuilder {
   }
 
   // --- MOR over orders: base inserts + update log + delete log -----------
-  private def buildMorOrders(spark: SparkSession, sfDir: String): Unit = {
+  // `parquetLogs` builds the variant `mor_parquet_orders`: the same three
+  // commits with EVERY update block a parquet data block and no MDT — the
+  // v6 non-hive parquet-log MOR shape (update + delete blocks).
+  private def buildMorOrders(spark: SparkSession, sfDir: String,
+      parquetLogs: Boolean = false): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
     val fs = FileSystem.get(hconf)
-    val base = new Path(morPath(sfDir))
+    val name = if (parquetLogs) "mor_parquet_orders" else "mor_orders"
+    val base = new Path(if (parquetLogs) morParquetPath(sfDir) else morPath(sfDir))
     fs.mkdirs(new Path(base, ".hoodie"))
-    writeProperties(fs, base, "mor_orders", "MERGE_ON_READ", Some("o_orderpriority"),
+    writeProperties(fs, base, name, "MERGE_ON_READ", Some("o_orderpriority"),
       hiveStyle = false,
       // advertises the record_index MDT partition built below; `files` is
       // deliberately absent so listing stays FS-based for this v6 table
-      extraProps = "hoodie.table.metadata.partitions=record_index\n")
+      extraProps = if (parquetLogs) "" else "hoodie.table.metadata.partitions=record_index\n")
 
     val src = orders(spark, sfDir)
     val parts = src.select("o_orderpriority").distinct().collect().map(_.getString(0)).sorted
@@ -415,7 +436,7 @@ object HudiFixtureBuilder {
     // metadata-prefixed schema for log records = base file footer schema
     val tableSchema = spark.read
       .parquet(new Path(base, files1.head._3).toString).schema
-    val avroSchema = SparkToAvro.toAvroSchema(tableSchema, "mor_orders_record")
+    val avroSchema = SparkToAvro.toAvroSchema(tableSchema, s"${name}_record")
 
     // deltacommit T2: per-file-group update log blocks — avro data blocks
     // everywhere except one parquet data block (both formats are covered
@@ -436,7 +457,7 @@ object HudiFixtureBuilder {
         val out = new DataOutputStream(fs.create(new Path(new Path(base, p), logName), true))
         val dataRows = rows.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
         try {
-          if (i == 0 && b == 0) {
+          if (parquetLogs || (i == 0 && b == 0)) {
             // parquet-format block: spill the rows through a parquet write
             val tmp = new Path(base, ".tmp_logpq")
             spark.createDataFrame(
@@ -472,6 +493,7 @@ object HudiFixtureBuilder {
         (p, fileIdB(i, b), s"$p/$logName")
       }
     writeCommit(fs, base, T3, "deltacommit", files3)
+    if (parquetLogs) return
 
     // --- record_index MDT partition: every record key → its (partition,
     // fileId) location, split over TWO index file groups by Hudi's real

@@ -311,7 +311,7 @@ class DataSourceV2Spec extends SparkTestBase {
   test("dsv2 append-only MOR keeps every log version (no-metafields)") {
     import org.apache.hadoop.fs.{FileSystem, Path}
     import java.io.DataOutputStream
-    val base = new Path("/root/repo/target/fixtures/append_only_mor")
+    val base = new Path(s"${graft.fixtures.HudiFixtureBuilder.targetDir}/fixtures/append_only_mor")
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))
@@ -408,6 +408,8 @@ class DataSourceV2Spec extends SparkTestBase {
         Fixtures.table("sample_table/mor/parquet/v6_simplekeygen_nonhivestyle.zip",
           "v6_simplekeygen_nonhivestyle", "dsv2diff_v6_morpq").toSeq ++
         Seq(graft.fixtures.HudiFixtureBuilder.morPath(sf),
+          // the v6 non-hive all-parquet-log MOR shape, self-hosted
+          graft.fixtures.HudiFixtureBuilder.morParquetPath(sf),
           graft.fixtures.HudiFixtureBuilder.morLogOnlyPath(sf),
           // Lance MOR merges columnar too (r13): same differential
           graft.fixtures.HudiFixtureBuilder.morLancePath(sf))
@@ -1047,7 +1049,7 @@ class DataSourceV2Spec extends SparkTestBase {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{col, max, min}
     import org.apache.spark.sql.types._
-    val base = new Path("/root/repo/target/fixtures/minmax_dec_ts")
+    val base = new Path(s"${graft.fixtures.HudiFixtureBuilder.targetDir}/fixtures/minmax_dec_ts")
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))

@@ -60,7 +60,7 @@ class MultiWriterSpec extends SparkTestBase {
   }
 
   private lazy val basePath: String = {
-    val dir = "/root/repo/target/fixtures/multiwriter_v8"
+    val dir = s"${graft.fixtures.HudiFixtureBuilder.targetDir}/fixtures/multiwriter_v8"
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     val b = new Path(dir)
     fs.delete(b, true)

@@ -19,7 +19,7 @@ class HudiColStatsWriterSpec extends SparkTestBase {
   private def copyFixture(name: String): String = {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val dst = new Path(s"/root/repo/target/hudi-fixtures/$name")
+    val dst = new Path(s"${graft.fixtures.HudiFixtureBuilder.targetDir}/hudi-fixtures/$name")
     fs.delete(dst, true)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new Path(graft.fixtures.HudiFixtureBuilder.rangePath(sfDir)), fs, dst, false,
@@ -78,7 +78,7 @@ class HudiColStatsWriterSpec extends SparkTestBase {
   test("inserts WIDEN partition_stats bounds; new partitions get fresh entries") {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val path = new Path("/root/repo/target/hudi-fixtures/writer_pstats")
+    val path = new Path(s"${graft.fixtures.HudiFixtureBuilder.targetDir}/hudi-fixtures/writer_pstats")
     fs.delete(path, true)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new Path(graft.fixtures.HudiFixtureBuilder.pstatsPath(sfDir)), fs, path, false,
@@ -115,7 +115,7 @@ class HudiColStatsWriterSpec extends SparkTestBase {
   test("upsert maintains bloom_filters: new files probe correctly") {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val path = new Path("/root/repo/target/hudi-fixtures/writer_bloom")
+    val path = new Path(s"${graft.fixtures.HudiFixtureBuilder.targetDir}/hudi-fixtures/writer_bloom")
     fs.delete(path, true)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new Path(graft.fixtures.HudiFixtureBuilder.bloomPath(sfDir)), fs, path, false,

@@ -24,7 +24,7 @@ class HudiIndexedWriterSpec extends SparkTestBase {
   private def copyFixture(name: String): String = {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val dst = new Path(s"/root/repo/target/hudi-fixtures/$name")
+    val dst = new Path(s"${graft.fixtures.HudiFixtureBuilder.targetDir}/hudi-fixtures/$name")
     fs.delete(dst, true)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new Path(graft.fixtures.HudiFixtureBuilder.morPath(sfDir)), fs, dst, false,

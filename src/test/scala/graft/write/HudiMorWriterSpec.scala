@@ -18,7 +18,7 @@ class HudiMorWriterSpec extends SparkTestBase {
   private def orders() = spark.read.parquet(s"$sfDir/orders.parquet")
 
   private def fresh(name: String): String = {
-    val p = new Path(s"/root/repo/target/hudi-fixtures/$name")
+    val p = new Path(s"${graft.fixtures.HudiFixtureBuilder.targetDir}/hudi-fixtures/$name")
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(p, true)
     p.toString
