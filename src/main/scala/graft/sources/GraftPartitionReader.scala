@@ -20,8 +20,9 @@ import scala.collection.mutable
   * the base file STREAMS against it, so memory is proportional to the
   * delta, not the file group, and the merge needs no shuffle at all. This
   * mirrors the reference's per-slice FileGroupReader execution
-  * (crates/core/src/file_group/reader.rs:205-279) and is the no-shuffle
-  * complement to the DataFrame-level [[graft.table.MorMerge]].
+  * (crates/core/src/file_group/reader.rs:205-279). With the columnar
+  * [[GraftColumnarMergeReader]] it is the only MOR merge: every read of
+  * [[graft.table.HudiTable]] and of the `hudi-graft` relation lands here.
   */
 class GraftReaderFactory(
     readFn: PartitionedFile => Iterator[InternalRow],

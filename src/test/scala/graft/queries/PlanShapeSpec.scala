@@ -253,4 +253,35 @@ class PlanShapeSpec extends SparkTestBase {
     val projs = q.collect().map(_.getAs[Long]("proj"))
     assert(projs.distinct.length > 1, "projection must separate the corpus")
   }
+
+  test("partition-filtered HudiTable snapshot is one hudi-graft scan, no shuffle") {
+    import graft.fixtures.HudiFixtureBuilder
+    import graft.fs.PartitionFilter
+    import graft.sources.{GraftScan, ScanMetrics}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    HudiFixtureBuilder.ensure(spark, sfDir)
+    val t = graft.table.HudiTable(spark, HudiFixtureBuilder.morPath(sfDir))
+    val q = t.snapshot(partitionFilters = Seq(PartitionFilter("o_orderpriority", "=", Seq("2-HIGH"))))
+    // the physical plan as prepared (exchanges included), before AQE runs
+    def prepared(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => prepared(a.executedPlan)
+      case other => other +: other.children.flatMap(prepared)
+    }
+    val nodes = prepared(q.queryExecution.executedPlan)
+    val scans = nodes.collect { case b: BatchScanExec => b.scan }
+    assert(scans.size == 1 && scans.head.isInstanceOf[GraftScan],
+      s"expected one hudi-graft BatchScan: ${nodes.map(_.nodeName).mkString(",")}")
+    assert(!nodes.exists(_.isInstanceOf[Exchange]),
+      s"the per-slice merge needs no exchange: ${nodes.map(_.nodeName).mkString(",")}")
+    // pruning planned only the matching partition's file groups
+    val latest = t.timeline.latestCommitTimestamp.get
+    val all = t.fsView.slicesAsOf(latest)
+    val matching = all.count(_.partitionPath == "2-HIGH")
+    val planned = scans.head.reportDriverMetrics()
+      .find(_.name == ScanMetrics.SlicesPlanned).map(_.value)
+    assert(matching > 0 && matching < all.size)
+    assert(planned.contains(matching.toLong), s"slices planned $planned, expected $matching")
+    assert(q.collect().forall(_.getAs[String]("o_orderpriority") == "2-HIGH"))
+  }
 }
