@@ -48,8 +48,9 @@ object HudiFixtureBuilder {
   /** The build output directory of the checkout these classes were
     * compiled in: the nearest `target` ancestor of the class files (sbt
     * compiles into `target/scala-2.13/classes`), else the class root's
-    * parent (a build that keeps its own output tree). Fixture tables and test scratch tables
-    * live under it, so a second checkout never writes into another's tree.
+    * parent (a build that keeps its own output tree). Fixture tables and
+    * test scratch tables live under it, so a second checkout never writes
+    * into another's tree.
     */
   lazy val targetDir: String =
     Option(getClass.getProtectionDomain.getCodeSource).map { cs =>
@@ -57,7 +58,6 @@ object HudiFixtureBuilder {
       Iterator.iterate(classes)(_.getParentFile).takeWhile(_ != null)
         .find(_.getName == "target").getOrElse(classes.getParentFile).getPath
     }.getOrElse(sys.props("java.io.tmpdir"))
-
 
   def cowPath(sfDir: String): String = s"${root(sfDir)}/cow_orders"
   def morPath(sfDir: String): String = s"${root(sfDir)}/mor_orders"
