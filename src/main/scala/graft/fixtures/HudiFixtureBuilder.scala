@@ -52,12 +52,12 @@ object HudiFixtureBuilder {
     * test scratch tables live under it, so a second checkout never writes
     * into another's tree.
     */
-  lazy val targetDir: String =
-    Option(getClass.getProtectionDomain.getCodeSource).map { cs =>
-      val classes = new java.io.File(cs.getLocation.toURI).getAbsoluteFile
-      Iterator.iterate(classes)(_.getParentFile).takeWhile(_ != null)
-        .find(_.getName == "target").getOrElse(classes.getParentFile).getPath
-    }.getOrElse(sys.props("java.io.tmpdir"))
+  lazy val targetDir: String = {
+    val classes = new java.io.File(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsoluteFile
+    Iterator.iterate(classes)(_.getParentFile).takeWhile(_ != null)
+      .find(_.getName == "target").getOrElse(classes.getParentFile).getPath
+  }
 
   def cowPath(sfDir: String): String = s"${root(sfDir)}/cow_orders"
   def morPath(sfDir: String): String = s"${root(sfDir)}/mor_orders"
